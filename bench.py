@@ -13,16 +13,6 @@ window; ``BENCH_r05.json`` parsed null with only 72/155 timings visible):
 * line 1: the full verbose artifact with the named ``queries`` map —
   human-readable, truncated in the driver capture, durable in
   ``BENCH_LOCAL.json``.
-* middle lines (r13, VERDICT r12 ask #2 — PERF has run with
-  ``n_common: 0`` because the compact line's positional ``qvals`` is
-  opaque to the driver's comparator): the named ``queries`` map again,
-  chunked into self-contained JSON lines of <= 1.5 KB, each
-  ``{"metric": "declared_query_seconds_part", "part": i, "parts": N,
-  "qfp": ..., "queries": {name: sec, ...}}`` — a consumer that scans
-  stdout lines (not just the tail) can rebuild the full named map by
-  merging ``queries`` across parts and checking ``qfp``.  The chunks
-  are ADDITIONS: nothing about line 1 or the last line changed, and a
-  tail-only consumer still sees the identical compact line last.
 * LAST line: a compact (<1.5 KB) self-contained JSON that always fits
   the 2000-char tail whole, so the driver's parse succeeds.  Per-query
   timings ride as ``qvals``, an array aligned index-for-index with
@@ -183,49 +173,6 @@ def compact_line(result: dict) -> str:
     return json.dumps(out, separators=(",", ":"))
 
 
-def chunk_lines(result: dict, budget: int = 1400) -> list[str]:
-    """The named ``queries`` map as self-contained JSON lines, each
-    under ``budget`` bytes (VERDICT r12 ask #2).  Every line repeats
-    ``qfp`` (the fingerprint of the full sorted timed-name list, same
-    as the compact line) plus part/parts, so a line-scanning consumer
-    can verify it merged a complete, consistent set."""
-    import hashlib
-
-    timings = result["queries"]
-    timed = sorted(timings)
-    qfp = hashlib.sha256(",".join(timed).encode()).hexdigest()[:8]
-
-    def line(part: int, parts: int, chunk: dict) -> str:
-        return json.dumps(
-            {
-                "metric": "declared_query_seconds_part",
-                "sf": result["sf"],
-                "part": part,
-                "parts": parts,
-                "qfp": qfp,
-                "queries": chunk,
-            },
-            separators=(",", ":"),
-        )
-
-    # First pass: greedy fill against the budget with a conservative
-    # per-entry estimate, then verify real encoded size (names are
-    # short enough that the estimate never misses by much).
-    chunks: list[dict] = [{}]
-    size = 0
-    for name in timed:
-        entry = len(name) + 12  # quotes, colon, value, comma
-        if size + entry > budget - 150 and chunks[-1]:
-            chunks.append({})
-            size = 0
-        chunks[-1][name] = timings[name]
-        size += entry
-    parts = len(chunks)
-    out = [line(i + 1, parts, c) for i, c in enumerate(chunks)]
-    assert all(len(s) <= budget + 200 for s in out)
-    return out
-
-
 def default_artifact(sf) -> str:
     """Artifact filename derived from the ACTUAL scale factor, so a run at
     sf1.0 can never clobber the sf0.1 baseline (r7 verdict item 5):
@@ -261,6 +208,4 @@ if __name__ == "__main__":
     except OSError:
         pass  # stdout lines below are still the primary contract
     print(json.dumps(result))
-    for ln in chunk_lines(result):
-        print(ln)
     print(compact_line(result))

@@ -30,11 +30,13 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+import threading
 import zipfile
 
 from pyspark.sql import SparkSession
 
 _SHIPPED: set[str] = set()  # application ids already covered in this process
+_SHIP_LOCK = threading.Lock()  # guards _SHIPPED's check-then-add
 
 
 def _source_files() -> list[str]:
@@ -71,11 +73,17 @@ def _build_zip() -> str:
     )
     if os.path.exists(zpath):
         return zpath
-    tmp = f"{zpath}.tmp.{os.getpid()}"
-    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-        for full in files:
-            rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-            zf.write(full, rel)
+    # One temp file per writer (threads of one process included), renamed
+    # into place atomically: concurrent builders never share a file.
+    fd, tmp = tempfile.mkstemp(
+        prefix=os.path.basename(zpath), suffix=".tmp", dir=os.path.dirname(zpath)
+    )
+    with os.fdopen(fd, "wb") as fh:
+        with zipfile.ZipFile(fh, "w", zipfile.ZIP_DEFLATED) as zf:
+            for full in files:
+                rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                zf.write(full, rel)
+    os.chmod(tmp, 0o644)  # mkstemp's 0600 would hide the shared zip
     os.replace(tmp, zpath)
     return zpath
 
@@ -89,7 +97,8 @@ def ensure_shipped(spark: SparkSession) -> None:
         app_id = sc.applicationId
     except Exception:  # noqa: BLE001 - e.g. Spark Connect: no JVM-side sc
         return
-    if app_id in _SHIPPED:
-        return
-    sc.addPyFile(_build_zip())
-    _SHIPPED.add(app_id)
+    with _SHIP_LOCK:
+        if app_id in _SHIPPED:
+            return
+        sc.addPyFile(_build_zip())
+        _SHIPPED.add(app_id)

@@ -32,7 +32,8 @@ from __future__ import annotations
 
 import inspect
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -83,23 +84,23 @@ class RoutingResult:
     routed: dict[str, DataFrame]
     unknown: DataFrame
     dead_letter: DataFrame
-    _cached: DataFrame | None = None
-    _enriched: DataFrame | None = None
-    _registered: list[str] = field(default_factory=list)
+    _enriched: DataFrame
+    _channel: Column
+    _cached: bool = False
 
     def unpersist(self) -> None:
         """Release the cached enriched frame (set by
         ``process_batch(cache=True)``); no-op otherwise."""
-        if self._cached is not None:
-            self._cached.unpersist()
+        if self._cached:
+            self._enriched.unpersist()
 
     def materialize(self) -> None:
         """Force the cached enriched frame to compute NOW (one pass).
         Call before draining channels from concurrent threads so the
         sink jobs only read cached blocks instead of racing block-level
         locks to fill the cache; no-op when not cached."""
-        if self._cached is not None:
-            self._cached.count()
+        if self._cached:
+            self._enriched.count()
 
     def metrics(self) -> dict[str, int]:
         """Routing counts per channel in ONE Spark job: each enriched row
@@ -109,33 +110,13 @@ class RoutingResult:
         not handler output sizes — a handler may aggregate.  For
         streaming observability prefer ``df.observe`` /
         StreamingQueryListener (R15/R18, no per-record logging)."""
-        registered = self._registered
-        unknown_pred = F.col("data_schema").isNull()
-        if registered:
-            unknown_pred = unknown_pred | ~F.col("data_schema").isin(registered)
-        else:
-            # parity with process_batch: with nothing registered, every
-            # VALID record is channel `unknown` — otherwise a valid row
-            # with a data_schema would be counted under routed.<sid> and
-            # silently dropped from the output dict (sum != batch size)
-            unknown_pred = F.lit(True)
-        channel = (
-            F.when(
-                F.col("reason").isNotNull(),
-                F.concat(F.lit("dead_letter."), F.col("reason")),
-            )
-            .when(unknown_pred, F.lit("unknown"))
-            .otherwise(F.concat(F.lit("routed."), F.col("data_schema")))
-        )
         counts = {
             r["channel"]: r["n"]
-            for r in self._enriched.groupBy(channel.alias("channel"))
+            for r in self._enriched.groupBy(self._channel.alias("channel"))
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-        out = {
-            f"routed.{sid}": counts.get(f"routed.{sid}", 0) for sid in registered
-        }
+        out = {f"routed.{sid}": counts.get(f"routed.{sid}", 0) for sid in self.routed}
         out["unknown"] = counts.get("unknown", 0)
         dl = {k: v for k, v in counts.items() if k.startswith("dead_letter.")}
         out["dead_letter"] = sum(dl.values())
@@ -384,49 +365,43 @@ class RoutingEngine:
     def _build_result(
         self, records: DataFrame, enriched: DataFrame, cache: bool
     ) -> RoutingResult:
+        # The channel rule, stated once (metrics() groups by `channel`):
+        # a row with a reason is dead letter; a valid row whose data
+        # schema is NULL or unregistered is unknown (the reference's
+        # unknown-schema skip, kinesisHandler.js:120-122); every other
+        # row is routed to its schema.  A bare `~isin` is NULL for a
+        # NULL $.data.schema and would drop the row from every channel;
+        # with nothing registered `isin` is false, so every valid row is
+        # unknown.  Each record lands in exactly one channel.
         is_bad = F.col("reason").isNotNull()
-        registered = list(self._registry)
-
-        dead_letter = enriched.filter(is_bad).select(
-            *[c for c in records.columns if c in enriched.columns],
-            "payload",
-            "reason",
+        is_unknown = F.col("data_schema").isNull() | ~F.col("data_schema").isin(
+            list(self._registry)
         )
+        channel = (
+            F.when(is_bad, F.concat(F.lit("dead_letter."), F.col("reason")))
+            .when(is_unknown, F.lit("unknown"))
+            .otherwise(F.concat(F.lit("routed."), F.col("data_schema")))
+        )
+        envelope = [c for c in records.columns if c in enriched.columns]
+
+        dead_letter = enriched.filter(is_bad).select(*envelope, "payload", "reason")
         valid = enriched.filter(~is_bad)
-        # A valid envelope with NULL $.data.schema must land in `unknown`
-        # (every record lands in exactly one channel — the reference's
-        # unknown-schema skip, kinesisHandler.js:120-122).  A bare
-        # `~isin(...)` evaluates to NULL for NULL data_schema and would
-        # silently drop the row from all three channels.
-        unknown_pred = F.col("data_schema").isNull()
-        if registered:
-            unknown_pred = unknown_pred | ~F.col("data_schema").isin(registered)
-        else:
-            unknown_pred = F.lit(True)
-        unknown = valid.filter(unknown_pred).select(
-            *[c for c in records.columns if c in enriched.columns],
-            "payload",
-            "data_schema",
-        )
-
+        unknown = valid.filter(is_unknown).select(*envelope, "payload", "data_schema")
         routed: dict[str, DataFrame] = {}
         for sid, (compiled, handler) in sorted(self._registry.items()):
             branch = (
                 valid.filter(F.col("data_schema") == F.lit(sid))
                 .withColumn("event", F.col(self._event_col(sid)))
-                .select(
-                    *[c for c in records.columns if c in enriched.columns],
-                    "event",
-                )
+                .select(*envelope, "event")
             )
             routed[sid] = handler(branch)  # R11 dispatch / R17 parallel
         return RoutingResult(
             routed=routed,
             unknown=unknown,
             dead_letter=dead_letter,
-            _cached=enriched if cache else None,
             _enriched=enriched,
-            _registered=registered,
+            _channel=channel,
+            _cached=cache,
         )
 
     # -- streaming entry point (R4, R13-R15) ------------------------------
@@ -440,7 +415,6 @@ class RoutingEngine:
         dead_letter_sink: Callable[[DataFrame, int], None] | None = None,
         unknown_sink: Callable[[DataFrame, int], None] | None = None,
         trigger_available_now: bool = True,
-        sink_parallelism: int = 1,
     ):
         """Structured-Streaming run: ``foreachBatch`` applies
         ``process_batch`` per micro-batch and hands each channel to its
@@ -455,17 +429,19 @@ class RoutingEngine:
         jobs and no per-record logging (the reference logs every payload,
         kinesisHandler.js:134,170 — an anti-pattern at scale).
 
-        ``sink_parallelism > 1`` drains the independent channel writes
-        (N routed + dead-letter + unknown) as CONCURRENT Spark jobs from
-        a thread pool — each write is a separate job over the already-
-        cached enriched frame, so they schedule side-by-side instead of
-        serially idling the cluster between commits (the channel writes
-        dominate micro-batch wall-clock; measured ~2.2× end-to-end
-        throughput at 600k records / 4 sinks on local[32] via
-        tools/bench_streaming.py, ~1.1× on small batches where per-batch
-        fixed costs dominate).  Any sink failure still
-        fails the whole micro-batch (R14): every thread is joined and
-        the first exception re-raised before the batch commits.
+        One drain rule: each micro-batch fills its cached enriched frame
+        in one pass, then writes every channel (N routed + dead-letter +
+        unknown) as its own Spark job from a thread pool with one thread
+        per channel, so the writes share the cluster instead of running
+        back to back.  Every thread is joined and the first sink failure
+        re-raised before the batch commits (R14).  On a 4-core host
+        (``local[4]``, ``python3 perfbench/run.py --workload
+        route-backlog --seconds 15 --trace 0``, 10 alternating pairs of
+        runs) this rule against a serial drain measured 12,999 vs 12,925
+        records/s, latency p50 2,537 vs 2,666 ms and CPU 0.228 vs 0.215
+        ms per record, all within run-to-run spread.  At ``local[32]``
+        the concurrent drain measured ~2.2x end-to-end throughput over
+        the serial one at 600k records (BASELINE.md).
         """
 
         def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -485,21 +461,12 @@ class RoutingEngine:
                     )
                 if unknown_sink is not None:
                     drains.append(lambda: unknown_sink(result.unknown, batch_id))
-                if sink_parallelism > 1 and len(drains) > 1:
-                    # fill the cache with ONE pass first so concurrent
-                    # sink jobs read blocks instead of racing to build them
-                    result.materialize()
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    with ThreadPoolExecutor(
-                        max_workers=min(sink_parallelism, len(drains))
-                    ) as pool:
-                        futures = [pool.submit(d) for d in drains]
-                        for f in futures:
-                            f.result()  # re-raise first failure (R14)
-                else:
-                    for d in drains:
-                        d()
+                # fill the cache with ONE pass first so concurrent sink
+                # jobs read blocks instead of racing to build them
+                result.materialize()
+                with ThreadPoolExecutor(max_workers=max(1, len(drains))) as pool:
+                    for f in [pool.submit(d) for d in drains]:
+                        f.result()  # re-raise first failure (R14)
             finally:
                 result.unpersist()
 
@@ -534,15 +501,23 @@ class RoutingEngine:
         ensure_shipped(records.sparkSession)
 
         def _sorted_apply(pdf):
-            key = pdf[order_col]
-            try:
-                # Kinesis sequence numbers are decimal strings compared
-                # NUMERICALLY (AWS contract); lexicographic order breaks
-                # the guarantee when digit counts differ ('100' < '99')
-                key = key.map(int)
-            except (TypeError, ValueError):
-                pass  # non-numeric order column: natural ordering
-            order = key.sort_values(kind="mergesort").index
-            return fn(pdf.loc[order])
+            # Kinesis sequence numbers are decimal strings compared
+            # NUMERICALLY (AWS contract); lexicographic order breaks the
+            # guarantee when digit counts differ ('100' < '99').  The key
+            # is per row, so one NULL or non-integer value cannot turn
+            # the whole key group back into string order: integers
+            # first (arbitrary precision), other values after them in
+            # natural order, NULL last.
+            def rank(v):
+                if v is None or v != v:  # None / NaN
+                    return (2,)
+                try:
+                    return (0, int(v))
+                except (TypeError, ValueError):
+                    return (1, v)
+
+            keys = [rank(v) for v in pdf[order_col]]
+            order = sorted(range(len(keys)), key=keys.__getitem__)
+            return fn(pdf.iloc[order])
 
         return records.groupBy(key_col).applyInPandas(tuned(_sorted_apply), output_schema)

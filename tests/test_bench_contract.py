@@ -100,39 +100,17 @@ def test_equal_count_name_divergence_is_detected():
     assert expand(parsed, names=names) == full["queries"]
 
 
-def test_chunk_lines_rebuild_named_map():
-    # VERDICT r12 ask #2: the named per-query map must be recoverable
-    # by a line-scanning consumer — chunked JSON lines, each complete,
-    # each under the tail-window budget, merging to the full map.
-    from bench import chunk_lines
-
-    full = _fake_result()
-    lines = chunk_lines(full)
-    merged: dict = {}
-    qfps = set()
-    for i, ln in enumerate(lines):
-        assert len(ln) <= 1600, f"chunk {i} is {len(ln)} chars"
-        rec = json.loads(ln)
-        assert rec["metric"] == "declared_query_seconds_part"
-        assert rec["part"] == i + 1
-        assert rec["parts"] == len(lines)
-        qfps.add(rec["qfp"])
-        assert not set(rec["queries"]) & set(merged), "overlapping chunks"
-        merged.update(rec["queries"])
-    assert len(qfps) == 1
-    assert merged == full["queries"]
-
-
-def test_chunk_lines_do_not_change_the_tail_contract():
-    # The LAST stdout line must remain the compact line: chunks are
-    # printed BEFORE it (pinned here against bench.py's print order),
-    # so a tail-only consumer parses exactly what it parsed in r12.
+def test_compact_line_is_the_last_print():
+    # The driver parses only the stdout tail, so the compact line must
+    # stay the LAST print in bench.py's __main__ (pinned against the
+    # source's print order).
     import inspect
 
     import bench
 
     src = inspect.getsource(bench)
-    main_part = src[src.index('__main__') :]
-    assert main_part.index("chunk_lines") < main_part.index(
-        "compact_line"
-    ), "compact line must stay last on stdout"
+    main_part = src[src.index('if __name__ == "__main__":') :]
+    prints = [
+        ln.strip() for ln in main_part.splitlines() if ln.strip().startswith("print(")
+    ]
+    assert prints[-1] == "print(compact_line(result))", prints

@@ -26,6 +26,22 @@ def plan_of(
     return jvm.PythonSQLUtils.explainString(jqe, mode)
 
 
+@pytest.fixture(scope="module")
+def inventory_plans(spark, sf_dir) -> dict[str, dict[str, str]]:
+    """Every inventory query's DataFrame built ONCE, with the two plan
+    strings the whole-inventory sweeps read: ``simple`` (physical) and
+    ``analyzed`` (logical, where broadcast hints are visible)."""
+    explain = spark._jvm.PythonSQLUtils.explainString
+    plans = {}
+    for name, build in sorted(all_queries().items()):
+        jqe = build(spark, sf_dir)._jdf.queryExecution()
+        plans[name] = {
+            "simple": explain(jqe, "simple"),
+            "analyzed": jqe.analyzed().toString(),
+        }
+    return plans
+
+
 def test_scan_pushes_filters_and_prunes_columns(spark, sf_dir):
     plan = plan_of(spark, "scan_filter_project", sf_dir)
     assert "PushedFilters" in plan
@@ -76,7 +92,7 @@ def test_grouped_topk_prunes_with_window_group_limit(spark, sf_dir):
     assert "WindowGroupLimit" in plan
 
 
-def test_jvm_only_queries_have_no_python_stage(spark, sf_dir):
+def test_jvm_only_queries_have_no_python_stage(inventory_plans):
     # every declared query except the pandas-UDF/UDAF/mapInPandas surface
     # must stay fully JVM-side (no BatchEvalPython / ArrowEvalPython /
     # FlatMapGroupsInPandas operators)
@@ -109,10 +125,10 @@ def test_jvm_only_queries_have_no_python_stage(spark, sf_dir):
         "multimodal_frame_sample",  # MJPEG walk + sampled-frame decode
     }
     offenders = []
-    for name in sorted(all_queries()):
+    for name, plans in inventory_plans.items():
         if name in python_ok:
             continue
-        plan = plan_of(spark, name, sf_dir, mode="simple")
+        plan = plans["simple"]
         if any(
             marker in plan
             for marker in ("EvalPython", "FlatMapGroupsInPandas", "MapInPandas")
@@ -148,7 +164,7 @@ def _broadcast_hint_targets(analyzed_plan: str):
                 break
 
 
-def test_no_explicit_broadcast_of_sf_scaling_tables(spark, sf_dir):
+def test_no_explicit_broadcast_of_sf_scaling_tables(inventory_plans):
     # SCALE.md broadcast policy: an explicit F.broadcast() hint is
     # allowed only on geography-BOUNDED dims (region: 5 rows, nation:
     # 25 rows — fixed by the data model at every scale factor) or on
@@ -160,10 +176,8 @@ def test_no_explicit_broadcast_of_sf_scaling_tables(spark, sf_dir):
     # auto-broadcast under threshold.
     bounded_cols = ("n_nationkey", "r_regionkey")
     offenders = []
-    for name in sorted(all_queries()):
-        df = all_queries()[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().analyzed().toString()
-        for kind, line in _broadcast_hint_targets(plan):
+    for name, plans in inventory_plans.items():
+        for kind, line in _broadcast_hint_targets(plans["analyzed"]):
             if kind == "derived":
                 continue
             if not any(col in line for col in bounded_cols):
@@ -171,7 +185,7 @@ def test_no_explicit_broadcast_of_sf_scaling_tables(spark, sf_dir):
     assert not offenders, f"broadcast hints on SF-scaling tables: {offenders}"
 
 
-def test_no_cartesian_product_outside_declared_brute_force(spark, sf_dir):
+def test_no_cartesian_product_outside_declared_brute_force(inventory_plans):
     # The ONLY query allowed a product join over DATA rows is
     # sim_cosine_topk (the declared brute-force correctness tier).
     # dedup_embedding_cosine's nested-loop is over its B(B+1)/2 BLOCK
@@ -207,8 +221,8 @@ def test_no_cartesian_product_outside_declared_brute_force(spark, sf_dir):
         "text_langid_classifier",
     }
     offenders = []
-    for name in sorted(all_queries()):
-        plan = plan_of(spark, name, sf_dir, mode="simple")
+    for name, plans in inventory_plans.items():
+        plan = plans["simple"]
         if "CartesianProduct" in plan and name not in cartesian_ok:
             offenders.append(f"{name}:cartesian")
         if "BroadcastNestedLoopJoin" in plan and name not in nested_loop_ok:
@@ -216,7 +230,7 @@ def test_no_cartesian_product_outside_declared_brute_force(spark, sf_dir):
     assert not offenders, f"unintended product joins: {offenders}"
 
 
-def test_global_windows_only_on_bounded_inputs(spark, sf_dir):
+def test_global_windows_only_on_bounded_inputs(inventory_plans):
     # SCALE.md "Expected WindowExec warnings": a window with NO
     # partition spec moves its whole input to one partition — allowed
     # only where that input is bounded independent of corpus size.
@@ -248,16 +262,15 @@ def test_global_windows_only_on_bounded_inputs(spark, sf_dir):
     # means the partition spec is empty.
     rx = re.compile(r"windowspecdefinition\(\s*[^,()]+ (?:ASC|DESC)")
     offenders = []
-    for name in sorted(all_queries()):
+    for name, plans in inventory_plans.items():
         if name in allowed:
             continue
-        plan = plan_of(spark, name, sf_dir, mode="simple")
-        if rx.search(plan):
+        if rx.search(plans["simple"]):
             offenders.append(name)
     assert not offenders, f"unbounded global windows: {offenders}"
 
 
-def test_no_shrinking_unbounded_following_frames(spark, sf_dir):
+def test_no_shrinking_unbounded_following_frames(inventory_plans):
     # r7 extreme-timestamp-twin find: a window frame [CURRENT ROW,
     # UNBOUNDED FOLLOWING] is evaluated by Spark's
     # UnboundedFollowingWindowFunctionFrame, which RE-AGGREGATES the
@@ -288,7 +301,7 @@ def test_no_shrinking_unbounded_following_frames(spark, sf_dir):
 
     offenders = [
         name
-        for name in sorted(all_queries())
-        if has_shrinking_suffix_frame(plan_of(spark, name, sf_dir, mode="simple"))
+        for name, plans in inventory_plans.items()
+        if has_shrinking_suffix_frame(plans["simple"])
     ]
     assert not offenders, f"O(n^2) suffix window frames: {offenders}"

@@ -237,6 +237,14 @@ def test_process_ordered_sorts_sequence_numbers_numerically(spark):
         ("k", "49590338271490256608559692538361571095921575989136588898", "f"),
         ("k", "18446744073709551616", "e"),
         ("k", "9223372036854775808", "d"),
+        # one NULL or non-integer value must not turn the whole group
+        # back into string order: integers first, other strings after
+        # them, NULL last
+        ("j", None, "e"),
+        ("j", "100", "c"),
+        ("j", "abc", "d"),
+        ("j", "99", "b"),
+        ("j", "7", "a"),
     ]
     df = spark.createDataFrame(
         rows, "partitionKey string, sequenceNumber string, tag string"
@@ -251,7 +259,10 @@ def test_process_ordered_sorts_sequence_numbers_numerically(spark):
     out = RoutingEngine.process_ordered(
         df, fn, "partitionKey string, order string"
     ).collect()
-    assert out[0]["order"] == "abcdef"
+    assert {r["partitionKey"]: r["order"] for r in out} == {
+        "k": "abcdef",
+        "j": "abcde",
+    }
 
 
 def test_metrics_match_channels_with_empty_registry(spark):
@@ -306,9 +317,10 @@ def test_randomized_batches_conserve_every_record(spark, engine):
         all_ids = {r[4] for r in rows}
         result = engine.process_batch(make_df(spark, rows), cache=True)
         try:
-            routed_ids = set()
-            for df in result.routed.values():
-                routed_ids |= {r["eventID"] for r in df.select("eventID").collect()}
+            routed = {
+                sid: {r["eventID"] for r in df.select("eventID").collect()}
+                for sid, df in result.routed.items()
+            }
             unknown_ids = {
                 r["eventID"]
                 for r in result.unknown.select("eventID").collect()
@@ -317,8 +329,18 @@ def test_randomized_batches_conserve_every_record(spark, engine):
                 r["eventID"]
                 for r in result.dead_letter.select("eventID").collect()
             }
+            metrics = result.metrics()
         finally:
             result.unpersist()
+        # metrics() must agree with the channel frames it counts
+        assert {
+            k: v for k, v in metrics.items() if not k.startswith("dead_letter.")
+        } == {
+            **{f"routed.{sid}": len(ids) for sid, ids in routed.items()},
+            "unknown": len(unknown_ids),
+            "dead_letter": len(dead_ids),
+        }
+        routed_ids = set().union(*routed.values())
         assert routed_ids | unknown_ids | dead_ids == all_ids
         assert not (routed_ids & unknown_ids)
         assert not (routed_ids & dead_ids)

@@ -169,9 +169,9 @@ def test_ordered_mode_preserves_per_key_order(spark, engine):
 
 
 def test_stream_parallel_sinks_same_results(spark, engine, tmp_path):
-    # sink_parallelism drains channels as concurrent Spark jobs; channel
-    # contents must be identical to the serial drain, and a sink failure
-    # must still fail the micro-batch.
+    # run_stream drains channels as concurrent Spark jobs; channel
+    # contents must be complete, and a sink failure must still fail the
+    # micro-batch.
     src = tmp_path / "src"
     src.mkdir()
     _write_batch_json(src / "b0.json", fx.batch_ok())
@@ -184,7 +184,6 @@ def test_stream_parallel_sinks_same_results(spark, engine, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
         routed_sink=routed_sink,
         dead_letter_sink=dead_sink,
-        sink_parallelism=4,
     )
     q.awaitTermination(120)
 
@@ -203,7 +202,6 @@ def test_stream_parallel_sinks_same_results(spark, engine, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt2"),
         routed_sink=exploding_sink,
         dead_letter_sink=dead_sink,
-        sink_parallelism=4,
     )
     with pytest.raises(Exception, match="sink down"):
         q2.awaitTermination(120)

@@ -1,20 +1,17 @@
-"""Streaming routing-engine throughput: records/sec through the full
-decode → parse → validate → route → sink pipeline.
+"""Streaming-operator throughput: the NB quality gate
+(``streaming/quality.py``) and the incremental ANN
+(``streaming/ann.py``), each drained as an availableNow stream.  Prints
+one JSON line per operator, each with the host-speed ``calib`` bracket
+from ``bench.calibration_probe``:
 
-Generates N envelope records (valid product events across 2 registered
-schemas plus a slice of bad/unknown records — the reference's workload
-shape, lib/kinesisHandler.js:19-57), streams them through the
-RoutingEngine with parquet channel sinks (availableNow), and prints ONE
-JSON line:
+    {"metric": "quality_gate_docs_per_sec", "value": N, ...}
+    {"metric": "ann_queries_per_sec", "value": N, ...}
 
-    {"metric": "routing_records_per_sec", "value": N, ...}
+Routing-engine throughput (``RoutingEngine.run_stream`` and
+``process_ordered``) is measured by ``perfbench/run.py --workload
+route-backlog`` and ``--workload route-python``.
 
-Context: the reference processes records one at a time on a single
-Node.js event loop; published Lambda/Kinesis deployments top out at
-the per-shard read limit. This measures the same per-record semantics
-vectorized over local[N].
-
-    PYTHONPATH=. python tools/bench_streaming.py [n_records]
+    PYTHONPATH=. python tools/bench_streaming.py [n_docs]
 """
 
 from __future__ import annotations
@@ -30,182 +27,22 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from kinesis_handler_spark.io.sinks import ParquetChannelSinks  # noqa: E402
-from kinesis_handler_spark.io.sources import envelope_json_stream  # noqa: E402
-from kinesis_handler_spark.routing import RoutingEngine  # noqa: E402
 from kinesis_handler_spark.session import get_spark  # noqa: E402
-from tests import fixtures as fx  # noqa: E402
 
 
-def generate(src_dir: str, n: int, files: int = 32) -> None:
-    """32 files ≈ a 32-shard stream: the file twin's unit of read
-    parallelism is the file exactly as Kinesis' is the shard, so the
-    source fans out over the 32 local cores the way a sharded stream
-    fans out over readers (8 files left a 32-core box ¾ idle during the
-    source scan — measured 33k → 50k rec/s from this change alone)."""
-    cols = [
-        "partitionKey", "sequenceNumber", "data", "approximateArrivalTimestamp",
-        "eventID", "eventSource", "eventSourceARN", "awsRegion",
-    ]
-    per_file = n // files
-    seq = 0
-    for f in range(files):
-        with open(os.path.join(src_dir, f"batch-{f:04d}.json"), "w") as fh:
-            for _ in range(per_file):
-                if seq % 50 == 49:  # 2% bad json
-                    row = fx.record(fx.b64(b"{broken"), pk=f"pk-{seq % 64}", seq=seq)
-                elif seq % 50 == 48:  # 2% unknown schema
-                    row = fx.record(
-                        fx.b64(fx.payload(fx.UNREGISTERED_ID, id=f"u-{seq}")),
-                        pk=f"pk-{seq % 64}", seq=seq,
-                    )
-                elif seq % 2 == 0:
-                    row = fx.record(
-                        fx.b64(fx.payload(
-                            fx.PRODUCT_CREATE_ID, id=f"p-{seq}",
-                            category=["Sweaters", "Pants", "Shoes"][seq % 3],
-                            price=1.0 + (seq % 100),
-                        )),
-                        pk=f"pk-{seq % 64}", seq=seq,
-                    )
-                else:
-                    row = fx.record(
-                        fx.b64(fx.payload(
-                            fx.PRODUCT_PURCHASE_ID, id=f"p-{seq}",
-                            quantity=1 + (seq % 99),
-                        )),
-                        pk=f"pk-{seq % 64}", seq=seq,
-                    )
-                obj = dict(zip(cols, row))
-                obj["approximateArrivalTimestamp"] = obj[
-                    "approximateArrivalTimestamp"
-                ].isoformat()
-                fh.write(json.dumps(obj) + "\n")
-                seq += 1
+def main(n_docs: int) -> None:
+    from bench import calibration_probe
 
-
-def bench_ordered(spark, work: str, n_records: int) -> dict:
-    """R16 throughput: per-key ORDERED processing via
-    ``RoutingEngine.process_ordered`` (hash-partition by partitionKey,
-    numeric sequence sort within the group, one Arrow-batched pandas
-    call per key).  Batch-mode: the ordered discipline is a per-batch
-    contract, so the stream wrapper adds nothing to what this measures.
-    The reference's synchronous handler replays records strictly one at
-    a time on one event loop — this is the distributed counterpart with
-    the same per-key guarantee."""
-    from kinesis_handler_spark.routing.engine import ENVELOPE_SCHEMA
-
-    src = os.path.join(work, "ordered_src")
-    os.makedirs(src, exist_ok=True)
-    generate(src, n_records)
-    records = spark.read.schema(ENVELOPE_SCHEMA).json(src)
-
-    def fn(pdf):
-        # representative ordered-consumer work: per-key running position
-        # over the (sorted) frame plus a payload-size projection
-        out = pdf[["partitionKey", "sequenceNumber"]].copy()
-        out["pos"] = range(len(pdf))
-        out["payload_len"] = pdf["data"].str.len()
-        return out
-
-    t0 = time.perf_counter()
-    RoutingEngine.process_ordered(
-        records, fn,
-        "partitionKey STRING, sequenceNumber STRING, pos LONG, "
-        "payload_len LONG",
-    ).write.format("noop").mode("overwrite").save()
-    elapsed = time.perf_counter() - t0
-    return {
-        "metric": "ordered_records_per_sec",
-        "value": round(n_records / elapsed),
-        "unit": "records/sec",
-        "n_records": n_records,
-        "elapsed_sec": round(elapsed, 2),
-    }
-
-
-def main(n_records: int) -> None:
-    spark = get_spark("routing-throughput-bench")
+    spark = get_spark("streaming-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    engine = RoutingEngine(fx.ENVELOPE_JSON_SCHEMA)
-    engine.register(fx.PRODUCT_CREATE_SCHEMA, lambda df: df)
-    engine.register(fx.PRODUCT_PURCHASE_SCHEMA, lambda df: df)
-
-    work = tempfile.mkdtemp(prefix="routing-bench-")
+    work = tempfile.mkdtemp(prefix="streaming-bench-")
     try:
-        # Warm-up: a tiny stream through the same engine first, so the
-        # timed run measures the pipeline, not one-time JVM JIT /
-        # session spin-up (same discipline as bench.py's warm-up).
-        warm_src = os.path.join(work, "warm_src")
-        os.makedirs(warm_src)
-        generate(warm_src, 3200, files=1)
-        warm_sinks = ParquetChannelSinks(os.path.join(work, "warm_out"))
-        engine.run_stream(
-            envelope_json_stream(spark, warm_src),
-            checkpoint_dir=os.path.join(work, "warm_ck"),
-            routed_sink=warm_sinks.routed,
-            dead_letter_sink=warm_sinks.dead_letter,
-            unknown_sink=warm_sinks.unknown,
-        ).awaitTermination()
-
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        generate(src, n_records)
-        sinks = ParquetChannelSinks(os.path.join(work, "out"))
-        t0 = time.perf_counter()
-        q = engine.run_stream(
-            envelope_json_stream(spark, src),
-            checkpoint_dir=os.path.join(work, "ck"),
-            routed_sink=sinks.routed,
-            dead_letter_sink=sinks.dead_letter,
-            unknown_sink=sinks.unknown,
-            sink_parallelism=int(
-                os.environ.get("SPARK_GRAFT_SINK_PARALLELISM", "4")
-            ),
-        )
-        q.awaitTermination()
-        elapsed = time.perf_counter() - t0
-        routed = sum(
-            spark.read.parquet(
-                os.path.join(work, "out", "routed", d)
-            ).count()
-            for d in os.listdir(os.path.join(work, "out", "routed"))
-        )
-        dead = spark.read.parquet(os.path.join(work, "out", "dead_letter")).count()
-        unknown = spark.read.parquet(os.path.join(work, "out", "unknown")).count()
-        assert routed + dead + unknown == (n_records // 32) * 32, (
-            routed, dead, unknown,
-        )
-        # Fixed-work host-speed probe (r9 verdict asks #6/#7): lets a
-        # reader normalize this host's reading against any other run's
-        # calib instead of adjudicating drift by forensics.
-        from bench import calibration_probe
-
+        # Fixed-work host-speed probe: lets a reader normalize this
+        # host's reading against any other run's calib.
         calib = calibration_probe(spark)
-        print(
-            json.dumps(
-                {
-                    "metric": "routing_records_per_sec",
-                    "value": round(n_records / elapsed),
-                    "unit": "records/sec",
-                    "n_records": n_records,
-                    "elapsed_sec": round(elapsed, 2),
-                    "routed": routed,
-                    "dead_letter": dead,
-                    "unknown": unknown,
-                    "calib": calib,
-                }
-            )
-        )
-        ordered = bench_ordered(spark, work, n_records)
-        ordered["calib"] = calib
-        print(json.dumps(ordered))
-        quality = bench_quality_gate(spark, work, n_records // 4)
-        quality["calib"] = calib
-        print(json.dumps(quality))
-        ann = bench_ann(spark, work)
-        ann["calib"] = calib
-        print(json.dumps(ann))
+        for rec in (bench_quality_gate(spark, work, n_docs), bench_ann(spark, work)):
+            rec["calib"] = calib
+            print(json.dumps(rec))
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -333,4 +170,4 @@ def bench_ann(
 
 
 if __name__ == "__main__":
-    main(int(sys.argv[1]) if len(sys.argv) > 1 else 400_000)
+    main(int(sys.argv[1]) if len(sys.argv) > 1 else 100_000)
